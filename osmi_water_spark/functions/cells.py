@@ -15,8 +15,9 @@ with a 2^res x 2^res grid over lon [-180,180] x lat [-90,90].
 Resolution <= 20 (cell ~34 m at the equator), ix/iy < 2^29.
 
 Raster tiles use the standard web-mercator z/x/y scheme; ids share the same
-packing. ``cell_to_tile`` / ``tile_to_cells`` give the raster<->vector
-assignment demanded by the graft (BASELINE.json:6).
+packing. ``tile_id`` (vector->raster) and ``tile_bounds`` / ``tile_to_cells``
+(raster->vector) give the assignment demanded by the graft
+(BASELINE.json:6).
 """
 
 from __future__ import annotations
@@ -31,43 +32,56 @@ IY_SHIFT = 29
 DEFAULT_RES = 7  # ~312 km cells; fixtures are small worlds
 MAX_COVER_CELLS = 64
 
+# Every builder below takes column names (or parenthesised SQL fragments)
+# and emits ONE SQL string parsed by a single F.expr round-trip: nested
+# Column-API building cost dozens-to-hundreds of py4j round-trips PER CALL
+# at DAG-construction time (~0.3 ms each; ~2.7 s of the pipeline's per-run
+# wall was driver-side chatter while 32 cores idled — guide §7.3's
+# "planning time is real time"). Literal suffixes are chosen for exact
+# types: `180.0D` (double, NOT the default decimal), `0L` for longs.
+# Values and types are pinned by
+# tests/test_wkb_cells.py::test_cell_and_tile_expressions_match_pinned_digests.
 
-def _clamp(c: Column, lo: Column, hi: Column) -> Column:
-    return F.greatest(lo, F.least(hi, c))
-
-
-def _encode(res: Column, ix: Column, iy: Column) -> Column:
-    return (
-        F.shiftleft(res.cast("long"), RES_BITS_SHIFT)
-        + F.shiftleft(iy.cast("long"), IY_SHIFT)
-        + ix.cast("long")
-    )
-
-
-def cell_res(cell: Column) -> Column:
-    return F.shiftright(cell, RES_BITS_SHIFT).cast("int")
-
-
-def cell_ix(cell: Column) -> Column:
-    return (cell % (1 << IY_SHIFT)).cast("long")
+# Lambda variables of the cover/ring expressions. Inside a lambda body a
+# name resolves to a lambda variable before any input column, so these are
+# quoted names that a plain column reference cannot spell.
+_LX, _LY = "`cell ix`", "`cell iy`"
 
 
-def cell_iy(cell: Column) -> Column:
-    return (F.shiftright(cell, IY_SHIFT) % (1 << IY_SHIFT)).cast("long")
+def _name(c: Column | str, fn: str) -> str:
+    """Column-name adapter for callers still holding ``F.col(...)``
+    references: a plain reference Column yields its name, any other Column
+    raises, a name passes through."""
+    if isinstance(c, Column):
+        node = c._jc.node()
+        if node.getClass().getSimpleName() != "UnresolvedAttribute":
+            raise TypeError(f"{fn}() takes column names or F.col(name) references, got {c!r}")
+        return node.sql()
+    return c
 
 
-# ---- SQL-text twins ----
-#
-# Each deeply nested Column builder below costs dozens-to-hundreds of py4j
-# round-trips PER CALL at DAG-construction time (~0.3 ms each; profiling
-# showed ~2.7 s of the pipeline's per-run wall was pure driver-side py4j
-# chatter while 32 cores idle — guide §7.3's "planning time is real time").
-# When the caller can name its inputs (plain column references), we build
-# the IDENTICAL expression as one SQL string and parse it with a single
-# F.expr round-trip. Literal forms are chosen so the parsed tree matches
-# the Column tree exactly: `180.0D` (double, NOT the default decimal),
-# `0L` for long literals, same operator order. Parity is pinned by
-# tests/test_wkb_cells.py::test_sql_text_twins_match_column_builders.
+def _cell_res_sql(cell: str) -> str:
+    return f"cast(shiftright({cell}, {RES_BITS_SHIFT}) as int)"
+
+
+def _cell_ix_sql(cell: str) -> str:
+    return f"cast({cell} % {1 << IY_SHIFT} as long)"
+
+
+def _cell_iy_sql(cell: str) -> str:
+    return f"cast(shiftright({cell}, {IY_SHIFT}) % {1 << IY_SHIFT} as long)"
+
+
+def cell_res(cell: str) -> Column:
+    return F.expr(_cell_res_sql(cell))
+
+
+def cell_ix(cell: str) -> Column:
+    return F.expr(_cell_ix_sql(cell))
+
+
+def cell_iy(cell: str) -> Column:
+    return F.expr(_cell_iy_sql(cell))
 
 
 def _ix_sql(lon: str, res: int) -> str:
@@ -91,69 +105,32 @@ def _cell_of_sql(lon: str, lat: str, res: int) -> str:
     return _encode_sql(str(res), _ix_sql(lon, res), _iy_sql(lat, res))
 
 
-def _ix_of(lon: Column, res: int) -> Column:
-    n = F.lit(float(1 << res))
-    raw = F.floor((lon + F.lit(180.0)) / F.lit(360.0) * n)
-    return _clamp(raw, F.lit(0), F.lit((1 << res) - 1))
-
-
-def _iy_of(lat: Column, res: int) -> Column:
-    n = F.lit(float(1 << res))
-    raw = F.floor((lat + F.lit(90.0)) / F.lit(180.0) * n)
-    return _clamp(raw, F.lit(0), F.lit((1 << res) - 1))
-
-
 def cell_of(lon: Column | str, lat: Column | str, res: int = DEFAULT_RES) -> Column:
-    """Point -> grid cell id at a fixed resolution. String args take the
-    one-round-trip SQL-text path (see the SQL-text twins note)."""
-    if isinstance(lon, str) and isinstance(lat, str):
-        return F.expr(_cell_of_sql(lon, lat, res))
-    return _encode(F.lit(res), _ix_of(lon, res), _iy_of(lat, res))
+    """Point -> grid cell id at a fixed resolution."""
+    return F.expr(_cell_of_sql(_name(lon, "cell_of"), _name(lat, "cell_of"), res))
 
 
-def cell_of_multi(lon: Column | str, lat: Column | str, resolutions: list[int]) -> Column:
+def cell_of_multi(lon: str, lat: str, resolutions: list[int]) -> Column:
     """Point -> array of cell ids, one per resolution (for joining against a
     multi-resolution polygon cover — bounded fan-out: len(resolutions) rows)."""
-    if isinstance(lon, str) and isinstance(lat, str):
-        return F.expr(
-            "array(" + ", ".join(_cell_of_sql(lon, lat, r) for r in resolutions) + ")"
-        )
-    return F.array(*[cell_of(lon, lat, r) for r in resolutions])
+    return F.expr(
+        "array(" + ", ".join(_cell_of_sql(lon, lat, r) for r in resolutions) + ")"
+    )
 
 
 def _bbox_cover_cells_sql(minx: str, miny: str, maxx: str, maxy: str, res: int) -> str:
     ix0, ix1 = _ix_sql(minx, res), _ix_sql(maxx, res)
     iy0, iy1 = _iy_sql(miny, res), _iy_sql(maxy, res)
-    enc = _encode_sql(str(res), "ix", "iy")
+    enc = _encode_sql(str(res), _LX, _LY)
     return (f"flatten(transform(sequence({iy0}, {iy1}), "
-            f"iy -> transform(sequence({ix0}, {ix1}), ix -> {enc})))")
+            f"{_LY} -> transform(sequence({ix0}, {ix1}), {_LX} -> {enc})))")
 
 
-def bbox_cover_cells(
-    minx: Column | str, miny: Column | str, maxx: Column | str, maxy: Column | str, res: int
-) -> Column:
-    """All cells at ``res`` intersecting the bbox (envelope cover).
-
-    Built from sequence+transform+flatten so it stays inside codegen.
-    String args take the one-round-trip SQL-text path.
-    """
-    if all(isinstance(c, str) for c in (minx, miny, maxx, maxy)):
-        return F.expr(_bbox_cover_cells_sql(minx, miny, maxx, maxy, res))
-    ix0, ix1 = _ix_of(minx, res), _ix_of(maxx, res)
-    iy0, iy1 = _iy_of(miny, res), _iy_of(maxy, res)
-    res_l = F.lit(res)
-    return F.flatten(
-        F.transform(
-            F.sequence(iy0, iy1),
-            lambda iy: F.transform(F.sequence(ix0, ix1), lambda ix: _encode(res_l, ix, iy)),
-        )
-    )
-
-
-def bbox_cover_count(minx: Column, miny: Column, maxx: Column, maxy: Column, res: int) -> Column:
-    ix0, ix1 = _ix_of(minx, res), _ix_of(maxx, res)
-    iy0, iy1 = _iy_of(miny, res), _iy_of(maxy, res)
-    return (ix1 - ix0 + 1) * (iy1 - iy0 + 1)
+def bbox_cover_cells(minx: str, miny: str, maxx: str, maxy: str, res: int) -> Column:
+    """All cells at ``res`` intersecting the bbox (envelope cover), iy outer
+    and ix inner. Built from sequence+transform+flatten so it stays inside
+    codegen."""
+    return F.expr(_bbox_cover_cells_sql(minx, miny, maxx, maxy, res))
 
 
 def _bbox_cover_count_sql(minx: str, miny: str, maxx: str, maxy: str, res: int) -> str:
@@ -163,8 +140,7 @@ def _bbox_cover_count_sql(minx: str, miny: str, maxx: str, maxy: str, res: int) 
 
 def _adaptive_cover_res_sql(minx: str, miny: str, maxx: str, maxy: str,
                             res_min: int, res_max: int, max_cells: int) -> str:
-    # mirror of adaptive_cover_res: CASE chain finest-first would invert
-    # the when-nesting; replicate the exact otherwise-nesting instead
+    # finest-last nesting: each finer resolution wraps the coarser fallback
     expr = str(res_min)
     for r in range(res_min + 1, res_max + 1):
         expr = (f"(CASE WHEN {_bbox_cover_count_sql(minx, miny, maxx, maxy, r)}"
@@ -172,61 +148,39 @@ def _adaptive_cover_res_sql(minx: str, miny: str, maxx: str, maxy: str,
     return expr
 
 
-def _adaptive_cover_cells_sql(minx: str, miny: str, maxx: str, maxy: str,
-                              res_min: int, res_max: int, max_cells: int) -> str:
-    res = _adaptive_cover_res_sql(minx, miny, maxx, maxy, res_min, res_max, max_cells)
-    out = _bbox_cover_cells_sql(minx, miny, maxx, maxy, res_min)
-    for r in range(res_min + 1, res_max + 1):
-        out = (f"(CASE WHEN {res} = {r} THEN "
-               f"{_bbox_cover_cells_sql(minx, miny, maxx, maxy, r)} ELSE {out} END)")
-    return out
-
-
 def adaptive_cover_res(
-    minx: Column,
-    miny: Column,
-    maxx: Column,
-    maxy: Column,
+    minx: str,
+    miny: str,
+    maxx: str,
+    maxy: str,
     res_min: int = 3,
     res_max: int = DEFAULT_RES,
     max_cells: int = MAX_COVER_CELLS,
 ) -> Column:
     """Finest resolution in [res_min, res_max] whose bbox cover stays within
     ``max_cells`` — bounds the explode fan-out per polygon regardless of
-    polygon size (big lakes coarsen instead of exploding). String args take
-    the one-round-trip SQL-text path."""
-    if all(isinstance(c, str) for c in (minx, miny, maxx, maxy)):
-        return F.expr(
-            _adaptive_cover_res_sql(minx, miny, maxx, maxy, res_min, res_max, max_cells)
-        )
-    expr = F.lit(res_min)
-    for r in range(res_min + 1, res_max + 1):
-        expr = F.when(bbox_cover_count(minx, miny, maxx, maxy, r) <= max_cells, F.lit(r)).otherwise(
-            expr
-        )
-    return expr
+    polygon size (big lakes coarsen instead of exploding)."""
+    return F.expr(
+        _adaptive_cover_res_sql(minx, miny, maxx, maxy, res_min, res_max, max_cells)
+    )
 
 
 def adaptive_cover_cells(
-    minx: Column,
-    miny: Column,
-    maxx: Column,
-    maxy: Column,
+    minx: str,
+    miny: str,
+    maxx: str,
+    maxy: str,
     res_min: int = 3,
     res_max: int = DEFAULT_RES,
     max_cells: int = MAX_COVER_CELLS,
 ) -> Column:
-    """Bbox cover at the adaptive resolution (array<long>). String args take
-    the one-round-trip SQL-text path."""
-    if all(isinstance(c, str) for c in (minx, miny, maxx, maxy)):
-        return F.expr(
-            _adaptive_cover_cells_sql(minx, miny, maxx, maxy, res_min, res_max, max_cells)
-        )
-    res = adaptive_cover_res(minx, miny, maxx, maxy, res_min, res_max, max_cells)
-    out = bbox_cover_cells(minx, miny, maxx, maxy, res_min)
+    """Bbox cover at the adaptive resolution (array<long>)."""
+    res = _adaptive_cover_res_sql(minx, miny, maxx, maxy, res_min, res_max, max_cells)
+    out = _bbox_cover_cells_sql(minx, miny, maxx, maxy, res_min)
     for r in range(res_min + 1, res_max + 1):
-        out = F.when(res == r, bbox_cover_cells(minx, miny, maxx, maxy, r)).otherwise(out)
-    return out
+        out = (f"(CASE WHEN {res} = {r} THEN "
+               f"{_bbox_cover_cells_sql(minx, miny, maxx, maxy, r)} ELSE {out} END)")
+    return F.expr(out)
 
 
 def np_cell_of(lon, lat, res: int):
@@ -254,7 +208,8 @@ def np_cover(minx, miny, maxx, maxy, res_min: int = 3, res_max: int = DEFAULT_RE
     Spark-computed one. Used by the probe-mode PIP join to derive the
     whole cover from the ALREADY-COLLECTED parts instead of running a
     second Spark job over the polygon side (guide §8: decide with small
-    rows)."""
+    rows). Parity (NaN/null bboxes aside) is pinned by
+    tests/test_spatial_join.py::test_np_cover_matches_jvm_cover."""
     import numpy as np
 
     minx = np.asarray(minx, dtype=np.float64)
@@ -296,39 +251,23 @@ def np_cover(minx, miny, maxx, maxy, res_min: int = 3, res_max: int = DEFAULT_RE
     return res, cells, owner
 
 
-def k_ring(cell: Column, k: int = 1) -> Column:
+def k_ring(cell: str, k: int = 1) -> Column:
     """Cells within Chebyshev distance k of ``cell`` at the same resolution
     (the kNN candidate ring, J6). No antimeridian wrap (documented limit)."""
-    res, ix, iy = cell_res(cell), cell_ix(cell), cell_iy(cell)
+    res, ix, iy = _cell_res_sql(cell), _cell_ix_sql(cell), _cell_iy_sql(cell)
     # shiftleft needs a literal bit count; 2^res via pow (exact for res<=20)
-    hi = F.pow(F.lit(2.0), res.cast("double")).cast("long") - 1
-    return F.flatten(
-        F.transform(
-            F.sequence(_clamp(iy - k, F.lit(0), hi), _clamp(iy + k, F.lit(0), hi)),
-            lambda y: F.transform(
-                F.sequence(_clamp(ix - k, F.lit(0), hi), _clamp(ix + k, F.lit(0), hi)),
-                lambda x: _encode(res, x, y),
-            ),
-        )
+    hi = f"(cast(pow(2.0D, cast({res} as double)) as long) - 1)"
+
+    def span(i: str) -> str:
+        return f"sequence(greatest(0, least({hi}, {i} - {k})), greatest(0, least({hi}, {i} + {k})))"
+
+    return F.expr(
+        f"flatten(transform({span(iy)}, {_LY} -> "
+        f"transform({span(ix)}, {_LX} -> {_encode_sql(res, _LX, _LY)})))"
     )
 
 
 # ---------------- raster (slippy z/x/y) tiles ----------------
-
-
-def tile_xy(lon: Column, lat: Column, z: int) -> tuple[Column, Column]:
-    """Web-mercator tile coordinates. Formula written identically to the
-    DuckDB oracle (ln(tan + 1/cos)) so both engines run the same IEEE ops."""
-    n = F.lit(float(1 << z))
-    tx = F.floor((lon + F.lit(180.0)) / F.lit(360.0) * n)
-    lat_rad = lat * F.lit(math.pi) / F.lit(180.0)
-    ty = F.floor(
-        (F.lit(1.0) - F.log(F.tan(lat_rad) + F.lit(1.0) / F.cos(lat_rad)) / F.lit(math.pi))
-        / F.lit(2.0)
-        * n
-    )
-    lim = F.lit((1 << z) - 1)
-    return _clamp(tx, F.lit(0), lim), _clamp(ty, F.lit(0), lim)
 
 
 def _tile_xy_sql(lon: str, lat: str, z: int) -> tuple[str, str]:
@@ -343,44 +282,42 @@ def _tile_xy_sql(lon: str, lat: str, z: int) -> tuple[str, str]:
             f"greatest(0L, least({lim}L, {ty}))")
 
 
-def _tile_id_sql(lon: str, lat: str, z: int) -> str:
+def tile_xy(lon: str, lat: str, z: int) -> tuple[Column, Column]:
+    """Web-mercator tile coordinates. Formula written identically to the
+    DuckDB oracle (ln(tan + 1/cos)) so both engines run the same IEEE ops."""
     tx, ty = _tile_xy_sql(lon, lat, z)
-    return _encode_sql(str(z), tx, ty)
+    return F.expr(tx), F.expr(ty)
 
 
 def tile_id(lon: Column | str, lat: Column | str, z: int) -> Column:
-    if isinstance(lon, str) and isinstance(lat, str):
-        return F.expr(_tile_id_sql(lon, lat, z))
-    tx, ty = tile_xy(lon, lat, z)
-    return _encode(F.lit(z), tx, ty.cast("long"))
+    tx, ty = _tile_xy_sql(_name(lon, "tile_id"), _name(lat, "tile_id"), z)
+    return F.expr(_encode_sql(str(z), tx, ty))
 
 
-def tile_bounds(z: int, tx: Column, ty: Column) -> tuple[Column, Column, Column, Column]:
-    """Tile -> lon/lat bbox (inverse mercator), for raster->vector assignment."""
-    n = F.lit(float(1 << z))
-    minx = tx / n * F.lit(360.0) - F.lit(180.0)
-    maxx = (tx + 1) / n * F.lit(360.0) - F.lit(180.0)
+def _tile_bounds_sql(z: int, tx: str, ty: str) -> tuple[str, str, str, str]:
+    n = f"{float(1 << z)!r}D"
 
-    def lat_of(yy: Column) -> Column:
-        t = F.lit(math.pi) * (F.lit(1.0) - F.lit(2.0) * yy / n)
-        return F.degrees(F.atan(F.sinh(t)))
+    def lat_of(yy: str) -> str:
+        return f"degrees(atan(sinh({math.pi!r}D * (1.0D - 2.0D * {yy} / {n}))))"
 
-    maxy = lat_of(ty.cast("double"))
-    miny = lat_of((ty + 1).cast("double"))
-    return minx, miny, maxx, maxy
+    return (f"({tx} / {n} * 360.0D - 180.0D)",
+            lat_of(f"cast(({ty} + 1) as double)"),
+            f"(({tx} + 1) / {n} * 360.0D - 180.0D)",
+            lat_of(f"cast({ty} as double)"))
 
 
-def tile_to_cells(z: int, tx: Column, ty: Column, res: int) -> Column:
+def tile_bounds(z: int, tx: str, ty: str) -> tuple[Column, Column, Column, Column]:
+    """Tile -> lon/lat bbox (minx, miny, maxx, maxy; inverse mercator), for
+    raster->vector assignment."""
+    return tuple(F.expr(b) for b in _tile_bounds_sql(z, tx, ty))
+
+
+def tile_to_cells(z: int, tx: str, ty: str, res: int) -> Column:
     """Raster->vector: grid cells covering a z/x/y raster tile's bbox."""
-    minx, miny, maxx, maxy = tile_bounds(z, tx, ty)
+    minx, miny, maxx, maxy = _tile_bounds_sql(z, tx, ty)
     # shrink by epsilon so a tile edge exactly on a cell boundary doesn't
     # pull in the neighbouring cell row/column
-    eps = F.lit(1e-9)
-    return bbox_cover_cells(minx + eps, miny + eps, maxx - eps, maxy - eps, res)
-
-
-def tile_quadkey(tile: Column) -> Column:
-    """Human-readable z/x/y string for a packed tile id."""
-    return F.concat_ws(
-        "/", cell_res(tile).cast("string"), cell_ix(tile).cast("string"), cell_iy(tile).cast("string")
-    )
+    eps = "1.0E-9D"
+    return F.expr(_bbox_cover_cells_sql(
+        f"({minx} + {eps})", f"({miny} + {eps})", f"({maxx} - {eps})", f"({maxy} - {eps})", res
+    ))

@@ -25,10 +25,6 @@ _U32 = struct.Struct("<I")
 POINT, LINESTRING, POLYGON, MULTIPOINT, MULTILINESTRING, MULTIPOLYGON = 1, 2, 3, 4, 5, 6
 
 
-def wkb_point(x: float, y: float) -> bytes:
-    return _HDR.pack(1, POINT) + struct.pack("<dd", x, y)
-
-
 def _coords_bytes(coords: np.ndarray) -> bytes:
     a = np.ascontiguousarray(coords, dtype="<f8")
     return _U32.pack(a.shape[0]) + a.tobytes()

@@ -117,6 +117,9 @@ def assemble_multipolygon(
 
 def _assemble_group(pdf: pd.DataFrame) -> pd.DataFrame:
     key = pdf["area_key"].iloc[0]
+    # the join + shuffle deliver members in any order; ring chaining starts
+    # at the first segment, so restore the relation's member order
+    pdf = pdf.sort_values("pos", kind="stable")
     outer, inner = [], []
     for role, pts in zip(pdf["role"], pdf["coords"]):
         seg = np.array([[p["lon"], p["lat"]] for p in pts], dtype=np.float64) if pts is not None and len(pts) else None
@@ -173,7 +176,7 @@ def build_areas(
     )
     members = mp_rels.select(
         F.col("id").alias("rel_id"),
-        F.explode("members").alias("m"),
+        F.posexplode("members").alias("pos", "m"),
     ).filter(F.col("m.type") == "way")
     segs = members.join(
         ways_located.selectExpr("id AS mw_id", "coords"),
@@ -181,6 +184,7 @@ def build_areas(
         "inner",
     ).selectExpr(
         "concat('r', rel_id) AS area_key",
+        "pos",
         "m.role AS role",
         "coords",
     )

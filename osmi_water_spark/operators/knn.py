@@ -55,9 +55,8 @@ def knn_join_exact(points: DataFrame, neighbors: DataFrame, k: int = 3) -> DataF
 
 def _cells_pass(points: DataFrame, neighbors: DataFrame, k: int, res: int, ring: int) -> DataFrame:
     pts = points.select(
-        "point_id", "lon", "lat",
-        F.explode(C.k_ring(C.cell_of(F.col("lon"), F.col("lat"), res), ring)).alias("cell"),
-    )
+        "point_id", "lon", "lat", C.cell_of("lon", "lat", res).alias("home"),
+    ).select("point_id", "lon", "lat", F.explode(C.k_ring("home", ring)).alias("cell"))
     nbr = neighbors.select(
         "neighbor_id",
         F.col("lon").alias("n_lon"),

@@ -22,8 +22,9 @@ from pyspark.sql import functions as F
 def locate_ways(ways: DataFrame, nodes: DataFrame) -> DataFrame:
     """ways(id, node_ids, ...) x nodes(id, lon, lat) -> ways + ``coords``
     array<struct<lon,lat>> (order-preserving, unlocated refs dropped).
-    Expression bodies are SQL text (single-parse, identical trees — see
-    cells.py "SQL-text twins")."""
+    Expression bodies are SQL text: one F.expr parse each instead of a
+    nested Column build's py4j round-trips (see the note at the top of
+    cells.py)."""
     exploded = ways.select(F.col("id").alias("way_id"), F.posexplode("node_ids").alias("pos", "nid"))
     located = exploded.join(
         nodes.selectExpr("id AS nid", "lon", "lat"), "nid", "left"

@@ -83,7 +83,7 @@ def main() -> None:
     # no join back to the point table
     pairs = pip_join(pts, parts, salt=8, carry_lonlat=True, unique_points=True)
     out = pairs.select(
-        "point_id", "area_key", C.tile_id(F.col("lon"), F.col("lat"), 8).alias("tile_id")
+        "point_id", "area_key", C.tile_id("lon", "lat", 8).alias("tile_id")
     )
     n_out = out.count()
     wall = time.time() - t0

@@ -5,6 +5,7 @@ agreement validates the re-formulation."""
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 
 from osmi_water_spark.functions import wkb as W
@@ -132,3 +133,45 @@ def test_open_ring_fails_whole_area(spark):
     assert rel_base + 1 not in names_by_rel          # Open: errored, absent
     assert names_by_rel.get(rel_base + 2) == "Closed"
     assert len(got["polygons"]) == 1
+
+
+def test_multipolygon_member_order_matches_oracle(spark):
+    """A relation's outer/inner rings are chained starting from its FIRST
+    member, whatever order the join and shuffle deliver the members in.
+    Member lists run against way-id order, and broadcast joins are off so
+    the sort-merge join reorders members by way id."""
+    from osmi_water_spark.sources.pages_gen import node, relation, render_page, way
+
+    ents, nid = [], iter(range(990_001, 999_999))
+    for k in range(6):
+        x0, y0 = 40.0 + 0.2 * k, -30.0
+
+        def ring(pts):
+            ids = [next(nid) for _ in pts]
+            ents.extend(node(i, x0 + dx, y0 + dy) for i, (dx, dy) in zip(ids, pts))
+            return ids + ids[:1]
+
+        outer = ring([(0, 0), (0.1, 0), (0.1, 0.1), (0.05, 0.12), (0, 0.1)])
+        hole = ring([(0.02, 0.02), (0.04, 0.02), (0.04, 0.04), (0.02, 0.04)])
+        wid = 980_000 + 10 * k
+        # outer split into three ways, hole into two; ids ascend along the ring
+        pieces = [(outer[0:3], "outer"), (outer[2:5], "outer"), (outer[4:], "outer"),
+                  (hole[0:3], "inner"), (hole[2:], "inner")]
+        for j, (refs, _) in enumerate(pieces):
+            ents.append(way(wid + j, refs, {}))
+        order = [2, 1, 0, 4, 3] if k % 2 else [1, 4, 0, 3, 2]
+        ents.append(relation(970_000 + k, [("way", wid + j, pieces[j][1]) for j in order],
+                             {"type": "multipolygon", "natural": "water", "name": f"L{k}"}))
+
+    want = {p[1]: W.wkb_multipolygon([[np.array(r) for r in p[5]]])
+            for p in run_oracle(ents)["polygons"]}
+    assert len(want) == 6
+    pages = PG.pages_dataframe(spark, [render_page("member_order", e) for e in ents])
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        out = run_pipeline(spark, pages, out_dir=None, with_lineage=False)
+        got = {r.relation_id: bytes(r.geom_wkb) for r in out["polygons"].collect()}
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    assert got == want

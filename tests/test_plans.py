@@ -127,3 +127,28 @@ def test_extraction_decode_is_jvm_side(spark):
         assert "ArrowEvalPython" not in q and "BatchEvalPython" not in q, (
             "entity consumers must not pay the text UDF (pruning broken)"
         )
+
+
+def test_driver_entry_runs_through_name_adapter(spark):
+    """The frozen driver entry point passes F.col references to
+    cell_of/tile_id; its rows must carry exactly the ids the name-based
+    builders give for each point."""
+    from pyspark.sql import functions as F
+
+    import __spark_entry__
+    from osmi_water_spark.functions import cells as C
+
+    out = __spark_entry__.entry(spark)
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema.fields] == [
+        ("point_id", "bigint"), ("poly_id", "bigint"), ("tile_id", "bigint"), ("cell_id", "bigint"),
+    ]
+    pts = Q._nodes_geo(spark, SF).select(
+        F.col("node_id").alias("point_id"),
+        C.tile_id("lon", "lat", Q.Z_TILE).alias("want_tile"),
+        C.cell_of("lon", "lat", Q.RES_CELL).alias("want_cell"),
+    )
+    got = out.join(pts, "point_id", "left").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.expr("count_if(NOT (tile_id <=> want_tile AND cell_id <=> want_cell))").alias("bad"),
+    ).first()
+    assert got.n > 0 and got.bad == 0

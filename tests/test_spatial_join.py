@@ -174,6 +174,63 @@ def test_np_cell_of_matches_formula():
     assert (C.np_cell_of(lon, lat, res) == want).all()
 
 
+def _cover_edge_boxes(res_min: int, res_max: int, max_cells: int) -> list[tuple]:
+    """Boxes on cell boundaries, at the domain limits, degenerate, and with
+    a cover of exactly ``max_cells`` at every resolution."""
+    boxes = [
+        (-180.0, -90.0, 180.0, 90.0), (-180.0, -90.0, -180.0, -90.0),
+        (180.0, 90.0, 180.0, 90.0), (179.9, 89.9, 180.0, 90.0),
+        (-180.0, 0.0, -179.0, 1.0), (10.0, 20.0, 10.0, 25.0), (10.0, 20.0, 15.0, 20.0),
+        (3.3, -4.4, 3.3, -4.4), (-200.0, -100.0, -190.0, -95.0), (190.0, 95.0, 200.0, 99.0),
+    ]
+    for r in range(res_min, res_max + 1):
+        cw, ch = 360.0 / (1 << r), 180.0 / (1 << r)
+        k = (1 << r) // 3
+        x, y = -180.0 + k * cw, -90.0 + k * ch  # exact cell corner
+        boxes += [(x, y, x, y), (x, y, x + cw, y + ch), (x, y, x + 2 * cw, y),
+                  (x - 1e-12, y - 1e-12, x + 1e-12, y + 1e-12)]
+        for w in (1, 2, 4, 8, 16, 32, 64):
+            h = max_cells // w
+            if w * h == max_cells and w <= (1 << r) and h <= (1 << r):
+                # centres of the first and last covered cells
+                boxes.append((x + 0.5 * cw, y + 0.5 * ch,
+                              x + (w - 0.5) * cw, y + (h - 0.5) * ch))
+    return boxes
+
+
+@pytest.mark.parametrize("res_min,res_max,max_cells", [(3, 7, 64), (2, 9, 16)])
+def test_np_cover_matches_jvm_cover(spark, res_min, res_max, max_cells):
+    """The driver-side numpy cover (probe-mode PIP) must equal the JVM
+    adaptive cover: resolution per box, cell ids, and cell order."""
+    import random
+
+    from osmi_water_spark.functions import cells as C
+
+    rng = random.Random(21)
+    boxes = _cover_edge_boxes(res_min, res_max, max_cells)
+    for _ in range(400):
+        x, y = rng.uniform(-185, 180), rng.uniform(-95, 90)
+        w, h = rng.choice([0.0, 0.01, 0.5, 3.0, 30.0]) * rng.random(), rng.uniform(0, 25)
+        boxes.append((x, y, x + w, y + h))
+    df = spark.createDataFrame(
+        [(i,) + b for i, b in enumerate(boxes)],
+        "i int, minx double, miny double, maxx double, maxy double",
+    )
+    bbox = ("minx", "miny", "maxx", "maxy")
+    rows = df.select(
+        "i",
+        C.adaptive_cover_res(*bbox, res_min, res_max, max_cells).alias("res"),
+        C.adaptive_cover_cells(*bbox, res_min, res_max, max_cells).alias("cells"),
+    ).orderBy("i").collect()
+    a = np.array(boxes)
+    res, cells, owner = C.np_cover(a[:, 0], a[:, 1], a[:, 2], a[:, 3], res_min, res_max, max_cells)
+    assert res.tolist() == [r.res for r in rows]
+    assert cells.tolist() == [c for r in rows for c in r.cells]
+    assert owner.tolist() == [r.i for r in rows for _ in r.cells]
+    counts = np.bincount(owner, minlength=len(boxes))
+    assert counts.max() <= max_cells or (res[counts > max_cells] == res_min).all()
+
+
 def test_probe_cover_arrow_collect_fallback(spark, monkeypatch):
     """The probe-cover collect is a single bounded Arrow pull (no Python
     Rows): with the cap forced below the cover size the join must fall

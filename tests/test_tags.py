@@ -14,7 +14,7 @@ def _run(spark, rows, colfn):
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(rows)], "i int, tags map<string,string>"
     )
-    out = df.select("i", colfn(F.col("tags")).alias("v")).orderBy("i").collect()
+    out = df.select("i", colfn("tags").alias("v")).orderBy("i").collect()
     return [r.v for r in out]
 
 
@@ -112,10 +112,13 @@ def test_get_way_type_and_category(spark):
         {"waterway": "brook"},
     ]
     assert _run(spark, rows, TG.get_way_type) == ["river", "other", "coastline", "", "brook"]
-    cats = _run(
-        spark, rows, lambda t: TG.get_waterway_category(TG.get_way_type(t))
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(rows)], "i int, tags map<string,string>")
+    cats = (
+        df.select("i", TG.get_way_type("tags").alias("wt"))
+        .select("i", TG.get_waterway_category("wt").alias("v"))
+        .orderBy("i").collect()
     )
-    assert cats == ["C", "?", "?", "?", "A"]
+    assert [r.v for r in cats] == ["C", "?", "?", "?", "A"]
 
 
 def test_get_polygon_type_quirk(spark):
@@ -152,19 +155,47 @@ def test_format_lastchange(spark):
         [(dt.datetime(2015, 7, 6, 12, 34, 56),)], "ts timestamp"
     )
     assert (
-        df.select(TG.format_lastchange(F.col("ts")).alias("v")).first().v
+        df.select(TG.format_lastchange("ts").alias("v")).first().v
         == "2015-07-06 12:34:56"
     )
 
 
-def test_sql_text_twins_match_column_builders(spark):
-    """r6: every tags.py / errors.py function's SQL-text path (string
-    column-name arg) must produce identical values and types to its
-    Column path, across all predicate branches."""
-    from pyspark.sql import functions as F
+# (type, sum(xxhash64), count(distinct), null count) per expression over the
+# 3,000 _tags_from_key rows below, captured from the Column-API builders
+# that these SQL-text bodies replaced (the values they held equal).
+PINNED_TAGS_ERRORS = {
+    "is_waterway_way": ("boolean", -13722243410781091678692, 2, 0),
+    "is_waterway_rel": ("boolean", -13227203926619023692804, 2, 0),
+    "waterpolygon_filter": ("boolean", -17692872606664345315502, 2, 0),
+    "has_waterway_tag": ("boolean", -16661540347993370344902, 2, 0),
+    "is_way_to_analyse": ("boolean", -18105405510132735303742, 2, 0),
+    "is_area_to_analyse": ("boolean", 974241275280301652358, 2, 0),
+    "is_riverbank_or_coastline": ("boolean", 3470065341264061081210, 2, 0),
+    "is_water_area": ("boolean", -17692872606664345315502, 2, 0),
+    "get_waterway_type": ("string", 13863988204765374825930, 5, 0),
+    "get_way_type": ("string", 8342330245925340937256, 10, 0),
+    "get_polygon_type": ("string", -18911200343729912393203, 5, 0),
+    "get_waterway_category": ("string", 5373794115860037894102, 4, 0),
+    "get_width_tag": ("string", -4066142314835108907135, 14, 143),
+    "get_construction": ("string", -21499402146416218171029, 3, 0),
+    "format_lastchange": ("string", 161558484110421624501, 3000, 0),
+    "name_or_empty": ("string", -5243944572646632276480, 41, 0),
+    "has_river": ("boolean", 283248661970748422056, 2, 0),
+    "switch_poss": ("int", -929532489339656329198, 2360, 0),
+    "node_specific": ("string", -10882860688214998106744, 3, 0),
+    "node_direction_error": ("string", 19105959626340706702500, 2, 0),
+    "node_name_error": ("string", 19105959626340706702500, 2, 0),
+    "node_type_error": ("string", 19105959626340706702500, 2, 0),
+    "node_spring_error": ("string", 19108200685906288935056, 2, 0),
+    "node_end_error": ("string", 19108200685906288935056, 2, 0),
+    "node_way_error": ("string", 19412984786825472562672, 2, 0),
+}
 
+
+def test_tag_and_error_expressions_match_pinned_digests(spark, digest):
+    """Every tags.py / errors.py builder reproduces the pinned type and
+    value digest across all predicate branches."""
     from osmi_water_spark.functions import errors as E
-    from osmi_water_spark.functions import tags as TG
     from osmi_water_spark.plans.testdata_queries import _tags_from_key
 
     df = spark.range(0, 3000).select(
@@ -177,39 +208,26 @@ def test_sql_text_twins_match_column_builders(spark):
             (F.col("id") % 7 + 1).cast("int"),
         ).alias("wt"),
     )
-    pairs = [
-        (TG.is_waterway(F.col("tags"), False), TG.is_waterway("tags", False)),
-        (TG.is_waterway(F.col("tags"), True), TG.is_waterway("tags", True)),
-        (TG.waterpolygon_filter(F.col("tags")), TG.waterpolygon_filter("tags")),
-        (TG.has_waterway_tag(F.col("tags")), TG.has_waterway_tag("tags")),
-        (TG.is_way_to_analyse(F.col("tags")), TG.is_way_to_analyse("tags")),
-        (TG.is_area_to_analyse(F.col("tags")), TG.is_area_to_analyse("tags")),
-        (TG.is_riverbank_or_coastline(F.col("tags")), TG.is_riverbank_or_coastline("tags")),
-        (TG.is_water_area(F.col("tags")), TG.is_water_area("tags")),
-        (TG.get_waterway_type(F.col("wt")), TG.get_waterway_type("wt")),
-        (TG.get_way_type(F.col("tags")), TG.get_way_type("tags")),
-        (TG.get_polygon_type(F.col("tags")), TG.get_polygon_type("tags")),
-        (TG.get_waterway_category(F.col("wt")), TG.get_waterway_category("wt")),
-        (TG.get_width_tag(F.col("tags")), TG.get_width_tag("tags")),
-        (TG.get_construction(F.col("tags")), TG.get_construction("tags")),
-        (TG.format_lastchange(F.col("ts")), TG.format_lastchange("ts")),
-        (TG.name_or_empty(F.col("tags")), TG.name_or_empty("tags")),
-        (E.has(F.col("mask"), E.RIVER), E.has("mask", E.RIVER)),
-        (E.switch_poss(F.col("mask")), E.switch_poss("mask")),
-        (E.resolve_false_positive(F.col("mask")), E.resolve_false_positive("mask")),
-    ]
-    col_out = E.node_output_columns(F.col("mask"))
-    sql_out = E.node_output_columns("mask")
-    for k in col_out:
-        pairs.append((col_out[k], sql_out[k]))
-    sel = df.select(
-        *[c.alias(f"col_{i}") for i, (c, _) in enumerate(pairs)],
-        *[s.alias(f"sql_{i}") for i, (_, s) in enumerate(pairs)],
-    )
-    sch = {f.name: f.dataType for f in sel.schema.fields}
-    for i in range(len(pairs)):
-        assert sch[f"col_{i}"] == sch[f"sql_{i}"], f"type mismatch at pair {i}"
-    bad = sel.filter(
-        " OR ".join(f"(NOT (col_{i} <=> sql_{i}))" for i in range(len(pairs)))
-    ).count()
-    assert bad == 0
+    exprs = {
+        "is_waterway_way": TG.is_waterway("tags", False),
+        "is_waterway_rel": TG.is_waterway("tags", True),
+        "waterpolygon_filter": TG.waterpolygon_filter("tags"),
+        "has_waterway_tag": TG.has_waterway_tag("tags"),
+        "is_way_to_analyse": TG.is_way_to_analyse("tags"),
+        "is_area_to_analyse": TG.is_area_to_analyse("tags"),
+        "is_riverbank_or_coastline": TG.is_riverbank_or_coastline("tags"),
+        "is_water_area": TG.is_water_area("tags"),
+        "get_waterway_type": TG.get_waterway_type("wt"),
+        "get_way_type": TG.get_way_type("tags"),
+        "get_polygon_type": TG.get_polygon_type("tags"),
+        "get_waterway_category": TG.get_waterway_category("wt"),
+        "get_width_tag": TG.get_width_tag("tags"),
+        "get_construction": TG.get_construction("tags"),
+        "format_lastchange": TG.format_lastchange("ts"),
+        "name_or_empty": TG.name_or_empty("tags"),
+        "has_river": E.has("mask", E.RIVER),
+        "switch_poss": E.switch_poss("mask"),
+    }
+    exprs.update({f"node_{k}": v for k, v in E.node_output_columns("mask").items()})
+    got = digest(df.select(*[v.alias(k) for k, v in exprs.items()]))
+    assert got == PINNED_TAGS_ERRORS

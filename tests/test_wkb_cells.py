@@ -3,16 +3,22 @@
 from __future__ import annotations
 
 import math
+import struct
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from osmi_water_spark.functions import cells as C
 from osmi_water_spark.functions import wkb as W
 
 
+def _wkb_point(x: float, y: float) -> bytes:
+    return struct.pack("<BI", 1, W.POINT) + struct.pack("<dd", x, y)
+
+
 def test_wkb_roundtrip():
-    p = W.wkb_point(8.5, 47.25)
+    p = _wkb_point(8.5, 47.25)
     g, (x, y) = W.parse_wkb(p)
     assert g == W.POINT and (x, y) == (8.5, 47.25)
 
@@ -69,11 +75,11 @@ def test_pip_multipolygon_wkb():
 def test_cell_encode_decode(spark):
     df = spark.createDataFrame([(8.54, 47.37), (-179.99, -89.99), (179.99, 89.99)], "lon double, lat double")
     out = df.select(
-        C.cell_of(F.col("lon"), F.col("lat"), 7).alias("c")
+        C.cell_of("lon", "lat", 7).alias("c")
     ).select(
-        C.cell_res(F.col("c")).alias("r"),
-        C.cell_ix(F.col("c")).alias("ix"),
-        C.cell_iy(F.col("c")).alias("iy"),
+        C.cell_res("c").alias("r"),
+        C.cell_ix("c").alias("ix"),
+        C.cell_iy("c").alias("iy"),
     ).collect()
     for row in out:
         assert row.r == 7 and 0 <= row.ix < 128 and 0 <= row.iy < 128
@@ -84,7 +90,7 @@ def test_cell_encode_decode(spark):
 
 def test_bbox_cover_and_adaptive(spark):
     df = spark.createDataFrame([(0.0, 0.0, 10.0, 5.0)], "minx double, miny double, maxx double, maxy double")
-    cols = [F.col(c) for c in ["minx", "miny", "maxx", "maxy"]]
+    cols = ["minx", "miny", "maxx", "maxy"]
     row = df.select(
         F.size(C.bbox_cover_cells(*cols, 7)).alias("n7"),
         C.adaptive_cover_res(*cols, 3, 7, 8).alias("ar"),
@@ -100,39 +106,45 @@ def test_point_cell_matches_cover(spark):
     # a point inside a bbox must land in one of the cover cells (same res)
     df = spark.createDataFrame([(3.3, 2.2)], "lon double, lat double")
     row = df.select(
-        C.cell_of(F.col("lon"), F.col("lat"), 6).alias("pc"),
-        C.bbox_cover_cells(F.lit(0.0), F.lit(0.0), F.lit(10.0), F.lit(5.0), 6).alias("cov"),
+        C.cell_of("lon", "lat", 6).alias("pc"),
+        C.bbox_cover_cells("0.0D", "0.0D", "10.0D", "5.0D", 6).alias("cov"),
     ).first()
     assert row.pc in row.cov
 
 
 def test_k_ring(spark):
     df = spark.createDataFrame([(10.0, 10.0)], "lon double, lat double")
-    row = df.select(
-        C.k_ring(C.cell_of(F.col("lon"), F.col("lat"), 7), 1).alias("ring")
+    row = df.select(C.cell_of("lon", "lat", 7).alias("c")).select(
+        "c", C.k_ring("c", 1).alias("ring")
     ).first()
     assert len(row.ring) == 9 and len(set(row.ring)) == 9
+    ix, iy = row.c % (1 << 29), (row.c >> 29) % (1 << 29)
+    assert sorted(row.ring) == sorted(
+        (7 << 58) + (y << 29) + x for y in (iy - 1, iy, iy + 1) for x in (ix - 1, ix, ix + 1)
+    )
 
 
 def test_tile_xy_reference_values(spark):
     # Zurich at z=10 -> x=536, y=358 (known slippy-map value)
     df = spark.createDataFrame([(8.54, 47.37)], "lon double, lat double")
-    tx, ty = C.tile_xy(F.col("lon"), F.col("lat"), 10)
+    tx, ty = C.tile_xy("lon", "lat", 10)
     row = df.select(tx.alias("x"), ty.alias("y")).first()
     assert (row.x, row.y) == (536, 358)
 
 
 def test_tile_bounds_roundtrip(spark):
     df = spark.createDataFrame([(536, 358)], "tx long, ty long")
-    minx, miny, maxx, maxy = C.tile_bounds(10, F.col("tx"), F.col("ty"))
+    minx, miny, maxx, maxy = C.tile_bounds(10, "tx", "ty")
     row = df.select(minx.alias("a"), miny.alias("b"), maxx.alias("c"), maxy.alias("d")).first()
     assert row.a <= 8.54 <= row.c and row.b <= 47.37 <= row.d
 
 
 def test_tile_to_cells(spark):
     df = spark.createDataFrame([(536, 358)], "tx long, ty long")
-    row = df.select(C.tile_to_cells(10, F.col("tx"), F.col("ty"), 7).alias("cells")).first()
-    assert len(row.cells) >= 1
+    row = df.select(C.tile_to_cells(10, "tx", "ty", 7).alias("cells")).first()
+    # tile 536/358 at z10 (8.44-8.79E, 47.28-47.52N) lies inside one res-7 cell
+    assert row.cells == [(7 << 58) + (math.floor(137.37 / 180 * 128) << 29)
+                         + math.floor(188.54 / 360 * 128)]
 
 
 def test_errors_switch_poss(spark):
@@ -143,7 +155,7 @@ def test_errors_switch_poss(spark):
          (E.POSS_RIVERMOUTH + E.STREAM,), (E.DIRECTION,)],
         "m int",
     )
-    got = [r.v for r in df.select(E.switch_poss(F.col("m")).alias("v")).collect()]
+    got = [r.v for r in df.select(E.switch_poss("m").alias("v")).collect()]
     assert got == [
         E.RIVER + E.END,
         E.RIVER + E.SPRING,
@@ -152,10 +164,42 @@ def test_errors_switch_poss(spark):
     ]
 
 
-def test_sql_text_twins_match_column_builders(spark):
-    """r6: the one-round-trip SQL-text paths (string column args) must
-    produce IDENTICAL values AND types to the Column-builder paths for
-    every cell/tile helper that has one."""
+# (type, sum(xxhash64), count(distinct), null count) per expression over the
+# seeded inputs below, captured from the Column-API builders that these
+# SQL-text bodies replaced (k_ring, tile_xy, tile_bounds, tile_to_cells and
+# cell_res/ix/iy had only a Column form before).
+PINNED_CELLS = {
+    "cell_of_7": ("bigint", 65273873184803490217, 298, 0),
+    "cell_of_multi": ("array<bigint>", 49741147677237420799, 298, 0),
+    "bbox_cover_cells_6": ("array<bigint>", 91755989149234625306, 300, 0),
+    "adaptive_cover_res": ("int", 467568335430141148280, 2, 0),
+    "adaptive_cover_cells": ("array<bigint>", 522374060091960578, 300, 0),
+    "tile_id_8": ("bigint", -18046166707673501795, 298, 0),
+    "cell_res": ("int", 836048464635343600500, 1, 0),
+    "cell_ix": ("bigint", -64976964718177204518, 110, 0),
+    "cell_iy": ("bigint", -76332280213838623223, 114, 0),
+    "k_ring_7_1": ("array<bigint>", 124605976875513446383, 298, 0),
+    "k_ring_7_2": ("array<bigint>", 1317692373916980613, 298, 0),
+    "k_ring_3_1": ("array<bigint>", 254216717086271963683, 63, 0),
+    "tile_x_8": ("bigint", 106841550217341147641, 168, 0),
+    "tile_y_8": ("bigint", 110904723046796202592, 150, 0),
+    "tile_x_12": ("bigint", 73588203709385743454, 283, 0),
+    "tile_y_12": ("bigint", 128534104153736681649, 271, 0),
+}
+PINNED_TILES = {
+    "tile_minx": ("double", 13119218694965983142, 172, 0),
+    "tile_miny": ("double", 149233261165070382541, 169, 0),
+    "tile_maxx": ("double", 31818308167280014393, 172, 0),
+    "tile_maxy": ("double", 46711170846994030689, 169, 0),
+    "tile_to_cells_7": ("array<bigint>", 241287131538371612677, 301, 0),
+    "tile_to_cells_10": ("array<bigint>", -208788055845610778496, 302, 0),
+}
+
+
+def test_cell_and_tile_expressions_match_pinned_digests(spark, digest):
+    """Every cells.py builder reproduces the pinned type and value digest
+    over 300 random bboxes (seed 11, including out-of-range coordinates)
+    and 304 z8 tiles (seed 12 plus the four corners)."""
     import random
 
     rng = random.Random(11)
@@ -168,32 +212,70 @@ def test_sql_text_twins_match_column_builders(spark):
         (F.col("minx") + F.col("w")).alias("maxx"),
         (F.col("miny") + F.col("h")).alias("maxy"),
         F.col("minx").alias("lon"), F.col("miny").alias("lat"),
+        C.cell_of("minx", "miny", 7).alias("c7"), C.cell_of("minx", "miny", 3).alias("c3"),
     )
-    pairs = [
-        (C.cell_of(F.col("lon"), F.col("lat"), 7), C.cell_of("lon", "lat", 7)),
-        (C.cell_of_multi(F.col("lon"), F.col("lat"), [3, 5, 7]),
-         C.cell_of_multi("lon", "lat", [3, 5, 7])),
-        (C.bbox_cover_cells(F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy"), 6),
-         C.bbox_cover_cells("minx", "miny", "maxx", "maxy", 6)),
-        (C.adaptive_cover_res(F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy"), 3, 7, 64),
-         C.adaptive_cover_res("minx", "miny", "maxx", "maxy", 3, 7, 64)),
-        (C.adaptive_cover_cells(F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy"), 3, 7, 64),
-         C.adaptive_cover_cells("minx", "miny", "maxx", "maxy", 3, 7, 64)),
-        (C.tile_id(F.col("lon"), F.col("lat"), 8), C.tile_id("lon", "lat", 8)),
-    ]
-    sel = df.select(
-        *[c.alias(f"col_{i}") for i, (c, _) in enumerate(pairs)],
-        *[s.alias(f"sql_{i}") for i, (_, s) in enumerate(pairs)],
-    )
-    sch = {f.name: f.dataType for f in sel.schema.fields}
-    for i in range(len(pairs)):
-        assert sch[f"col_{i}"] == sch[f"sql_{i}"], f"type mismatch at {i}"
-    bad = sel.filter(
-        " OR ".join(
-            f"(NOT (col_{i} <=> sql_{i}))" for i in range(len(pairs))
-        )
-    ).count()
-    assert bad == 0
+    bbox = ("minx", "miny", "maxx", "maxy")
+    tx8, ty8 = C.tile_xy("lon", "lat", 8)
+    tx12, ty12 = C.tile_xy("lon", "lat", 12)
+    exprs = {
+        "cell_of_7": C.cell_of("lon", "lat", 7),
+        "cell_of_multi": C.cell_of_multi("lon", "lat", [3, 5, 7]),
+        "bbox_cover_cells_6": C.bbox_cover_cells(*bbox, 6),
+        "adaptive_cover_res": C.adaptive_cover_res(*bbox, 3, 7, 64),
+        "adaptive_cover_cells": C.adaptive_cover_cells(*bbox, 3, 7, 64),
+        "tile_id_8": C.tile_id("lon", "lat", 8),
+        "cell_res": C.cell_res("c7"), "cell_ix": C.cell_ix("c7"), "cell_iy": C.cell_iy("c7"),
+        "k_ring_7_1": C.k_ring("c7", 1), "k_ring_7_2": C.k_ring("c7", 2),
+        "k_ring_3_1": C.k_ring("c3", 1),
+        "tile_x_8": tx8, "tile_y_8": ty8, "tile_x_12": tx12, "tile_y_12": ty12,
+    }
+    assert digest(df.select(*[v.alias(k) for k, v in exprs.items()])) == PINNED_CELLS
+
+    rng = random.Random(12)
+    tiles = [(rng.randrange(1 << 8), rng.randrange(1 << 8)) for _ in range(300)]
+    tiles += [(0, 0), (255, 255), (0, 255), (255, 0)]
+    tdf = spark.createDataFrame(tiles, "tx long, ty long")
+    minx, miny, maxx, maxy = C.tile_bounds(8, "tx", "ty")
+    exprs = {
+        "tile_minx": minx, "tile_miny": miny, "tile_maxx": maxx, "tile_maxy": maxy,
+        "tile_to_cells_7": C.tile_to_cells(8, "tx", "ty", 7),
+        "tile_to_cells_10": C.tile_to_cells(8, "tx", "ty", 10),
+    }
+    assert digest(tdf.select(*[v.alias(k) for k, v in exprs.items()])) == PINNED_TILES
+
+
+def test_lambda_variables_do_not_capture_input_columns(spark):
+    """Input columns named like the cover/ring loop variables (iy, ix) must
+    be read as columns, not as the lambda's loop variable."""
+    vals = [(-10.0, 20.0, 30.0, 40.0), (100.5, -60.0, 105.0, -58.0)]
+    named = spark.createDataFrame(vals, "iy double, miny double, ix double, maxy double")
+    plain = spark.createDataFrame(vals, "a double, b double, c double, d double")
+    for res in (3, 6):
+        got = [r.v for r in named.select(C.bbox_cover_cells("iy", "miny", "ix", "maxy", res).alias("v")).collect()]
+        want = [r.v for r in plain.select(C.bbox_cover_cells("a", "b", "c", "d", res).alias("v")).collect()]
+        assert got == want
+    got = named.select(C.adaptive_cover_cells("iy", "miny", "ix", "maxy", 3, 7, 16).alias("v")).collect()
+    want = plain.select(C.adaptive_cover_cells("a", "b", "c", "d", 3, 7, 16).alias("v")).collect()
+    assert [r.v for r in got] == [r.v for r in want]
+    ring = named.select(C.cell_of("iy", "miny", 5).alias("ix")).select(C.k_ring("ix", 1).alias("v"))
+    plain_ring = plain.select(C.cell_of("a", "b", 5).alias("c")).select(C.k_ring("c", 1).alias("v"))
+    assert [r.v for r in ring.collect()] == [r.v for r in plain_ring.collect()]
+
+
+def test_name_adapter_accepts_references_and_rejects_expressions(spark):
+    """cell_of / tile_id accept F.col(name) references (the driver entry
+    point passes them) and reject any other Column loudly."""
+    df = spark.createDataFrame([(8.54, 47.37), (-179.99, -89.99)], "lon double, lat double")
+    by_ref = df.select(C.cell_of(F.col("lon"), F.col("lat"), 7).alias("c"),
+                       C.tile_id(F.col("lon"), F.col("lat"), 9).alias("t")).collect()
+    by_name = df.select(C.cell_of("lon", "lat", 7).alias("c"),
+                        C.tile_id("lon", "lat", 9).alias("t")).collect()
+    assert by_ref == by_name
+    for bad in (F.col("lon") + 1, F.lit("lon"), F.col("lon").alias("x")):
+        with pytest.raises(TypeError, match="cell_of"):
+            C.cell_of(bad, "lat", 7)
+        with pytest.raises(TypeError, match="tile_id"):
+            C.tile_id("lon", bad, 9)
 
 
 def _scalar_linestring(pts):
