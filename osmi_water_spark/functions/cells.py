@@ -12,7 +12,7 @@ pre-filter, exact refine = prepared-polygon contains).
 
 Cell id packing (64-bit long):  (res << 58) | (iy << 29) | ix
 with a 2^res x 2^res grid over lon [-180,180] x lat [-90,90].
-Resolution <= 20 (cell ~34 m at the equator), ix/iy < 2^29.
+Resolution <= ``MAX_RES`` = 20 (cell ~34 m at the equator), ix/iy < 2^29.
 
 Raster tiles use the standard web-mercator z/x/y scheme; ids share the same
 packing. ``tile_id`` (vector->raster) and ``tile_bounds`` / ``tile_to_cells``
@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 RES_BITS_SHIFT = 58
 IY_SHIFT = 29
 DEFAULT_RES = 7  # ~312 km cells; fixtures are small worlds
+MAX_RES = 20  # grid limit: the finest resolution any cover may use
 MAX_COVER_CELLS = 64
 
 # Every builder below takes column names (or parenthesised SQL fragments)
@@ -255,7 +256,7 @@ def k_ring(cell: str, k: int = 1) -> Column:
     """Cells within Chebyshev distance k of ``cell`` at the same resolution
     (the kNN candidate ring, J6). No antimeridian wrap (documented limit)."""
     res, ix, iy = _cell_res_sql(cell), _cell_ix_sql(cell), _cell_iy_sql(cell)
-    # shiftleft needs a literal bit count; 2^res via pow (exact for res<=20)
+    # shiftleft needs a literal bit count; 2^res via pow (exact for res<=MAX_RES)
     hi = f"(cast(pow(2.0D, cast({res} as double)) as long) - 1)"
 
     def span(i: str) -> str:

@@ -11,7 +11,18 @@ Reference: STRtree envelope query + PreparedPolygon::contains
   vectorized ray-cast refine   == prepared contains
   distinct(point, area)        == first-containing-polygon break
 
-Scale properties: the only shuffle is the cell equi-join; polygon fan-out
+When the polygon side fits the broadcast, the preferred strategy is the
+map-side probe (``CellProbeIndex``): the cover is sized to the parts, not
+to the caller's knobs. Each part takes the finest resolution in
+[res_min, ``C.MAX_RES``] at which its bbox spans at most
+``PROBE_CELLS_PER_PART`` (2x2) cells, so a point meets about as many
+candidate parts as an STRtree envelope query returns. The probe looks
+points up at exactly the resolutions that cover uses.
+
+The cell-join paths (parts too big to broadcast, or a probe cover over
+``MAX_PROBE_CELLS``) use the caller's ``res_max``/``max_cells`` cover
+instead: coarse, because each extra resolution costs the point side one
+exploded row. There the only shuffle is the cell equi-join; polygon fan-out
 is bounded by ``max_cells`` per part (big polygons coarsen resolution
 instead of exploding); point fan-out is bounded by the number of distinct
 cover resolutions actually present (collected, tiny). Dense cells are
@@ -43,6 +54,10 @@ MAX_BROADCAST_BYTES = 128 << 20
 # map-side probe eligibility: the (cell, area) cover table must itself fit
 # in the broadcast (16 bytes/row -> ~64 MB at the cap)
 MAX_PROBE_CELLS = 4_000_000
+# probe cover rule: each part at the finest resolution whose bbox spans at
+# most this many cells (2x2). A looser bound (64) reaches res 16 and is no
+# faster, but builds a ~12x larger index on the driver.
+PROBE_CELLS_PER_PART = 4
 
 
 class CellProbeIndex:
@@ -60,6 +75,8 @@ class CellProbeIndex:
 
     def __init__(self, cover_pairs: np.ndarray, index: "W.FlatPolygonIndex",
                  res_list: list[int], keys: list):
+        import pyarrow as pa
+
         pairs = np.asarray(cover_pairs, dtype=np.int64).reshape(-1, 2)
         order = np.lexsort((pairs[:, 1], pairs[:, 0]))
         pairs = pairs[order]
@@ -75,7 +92,8 @@ class CellProbeIndex:
         self.cand_count = np.diff(np.append(starts, len(cells))).astype(np.int64)
         self.index = index
         self.res_list = list(res_list)
-        self.keys = np.asarray(keys, dtype=object)
+        # area_key per key id, emitted with one Arrow take per batch
+        self.keys = pa.array(keys, pa.string())
 
     def candidates(self, cells: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
         """cells (n,) -> ragged (row_idx, key_id) candidate expansion."""
@@ -128,13 +146,42 @@ def _probe_refine(
         rsel, ksel = rows[keep], kk[keep]
         arrays = [
             pa.array(ids[rsel], type=pa.int64()),
-            pa.array(probe.keys[ksel], type=pa.string()),
+            probe.keys.take(ksel),
         ]
         names = ["point_id", "area_key"]
         if carry_lonlat:
             arrays += [pa.array(lon[rsel]), pa.array(lat[rsel])]
             names += ["lon", "lat"]
         yield pa.RecordBatch.from_arrays(arrays, names)
+
+
+def _probe_index(keys: list, bbox: np.ndarray, index: "W.FlatPolygonIndex",
+                 res_min: int) -> CellProbeIndex | None:
+    """The map-side probe (cover rule: module docstring) over collected
+    parts, one area_key and (minx, miny, maxx, maxy) row each; None when
+    the pre-dedup pair count, an upper bound, exceeds ``MAX_PROBE_CELLS``,
+    decided before the pair table or the probe index is allocated."""
+    bad = ~np.isfinite(bbox).all(axis=1)
+    if bad.any():
+        # np_cover would cast NaN to a plausible-looking res-MAX_RES cell
+        raise ValueError(
+            f"pip_join: part of area_key {keys[int(np.argmax(bad))]!r} has a non-finite bbox"
+        )
+    res, cover_cells, cover_owner = C.np_cover(
+        *bbox.T, res_min, C.MAX_RES, PROBE_CELLS_PER_PART
+    )
+    if len(cover_cells) > MAX_PROBE_CELLS:
+        return None
+    key_of_part = np.fromiter(
+        map(index.key_id.__getitem__, keys), dtype=np.int64, count=len(keys)
+    )
+    # CellProbeIndex dedups (cell, key) pairs: several parts of one key can
+    # cover the same cell. key_id is built in id order, so list() maps ids
+    # back to keys.
+    return CellProbeIndex(
+        np.column_stack([cover_cells, key_of_part[cover_owner]]),
+        index, sorted({int(r) for r in res}), list(index.key_id),
+    )
 
 
 def should_broadcast_parts(n_parts: int, n_bytes: int,
@@ -186,14 +233,22 @@ def pip_join(
     """points(point_id, lon, lat) x parts(area_key, part_wkb, minx..maxy)
     -> contained pairs (point_id, area_key), deduplicated.
 
-    ``salt`` > 1 replicates the polygon side k ways and routes each point to
-    one deterministic replica — use when single cells are hot.
-
     ``broadcast_parts``: when the polygon set is small (the common case —
-    polygons << points), the WKB geometries are shipped once per executor
-    as a broadcast dict and the join/shuffle carries only (cell, area_key,
-    bbox) — at wide-polygon scale the per-candidate WKB payload is the
-    shuffle bottleneck. None = auto (broadcast when <= 200k parts).
+    polygons << points), the parts are collected once and shipped per
+    executor. The join then runs as the map-side probe, whose cover is
+    sized to the parts (module docstring) and whose ``(cell, area)`` table
+    is capped at ``MAX_PROBE_CELLS`` pairs. None = auto (broadcast when
+    <= 200k parts and <= 128 MB of WKB). In probe mode a part with a
+    non-finite bbox raises ``ValueError``.
+
+    ``res_max``, ``max_cells`` and ``res_list`` steer only the cell-join
+    paths: parts not broadcast, or a probe cover over the cap (then the
+    broadcast WKB refines an equi-join). ``res_list`` None discovers the
+    cover's resolutions with one tiny aggregate.
+
+    ``salt`` > 1 replicates the cell-join's polygon side k ways and routes
+    each point to one deterministic replica — use when single cells are
+    hot.
 
     ``unique_points``: caller-declared contract that ``point_id`` values are
     unique. In probe mode this makes the join fully shuffle-free (the
@@ -217,67 +272,31 @@ def pip_join(
             MAX_BROADCAST_PARTS, MAX_BROADCAST_BYTES,
         )
 
-    part_rows = None
     if broadcast_parts:
         # ONE collect brings the whole polygon side (bounded by the
         # broadcast decision) to the driver: WKB for the flat index AND the
-        # bboxes, from which the adaptive cover is derived in numpy
-        # (C.np_cover — exact twin of the JVM expressions). Previously the
-        # cover and the resolution discovery were 1-2 MORE Spark jobs over
-        # the same polygon side (guide §8: decide with small rows; the
-        # polygon side is small by construction here).
+        # bboxes the probe cover is derived from in numpy (guide §8: decide
+        # with small rows; the polygon side is small by construction here).
         part_rows = polygon_parts.select(
             "area_key", "part_wkb", "minx", "miny", "maxx", "maxy"
         ).collect()
-        res_np, cover_cells, cover_owner = C.np_cover(
-            [r["minx"] for r in part_rows], [r["miny"] for r in part_rows],
-            [r["maxx"] for r in part_rows], [r["maxy"] for r in part_rows],
-            res_min, res_max, max_cells,
-        ) if part_rows else (np.empty(0, np.int64),) * 3
-        if res_list is None:
-            res_list = sorted({int(r) for r in res_np})
-    elif res_list is None:
-        # polygon side too big to collect: discover the resolutions
-        # actually present with one tiny aggregate
-        res_rows = polygon_parts.select(
-            C.adaptive_cover_res(
-                "minx", "miny", "maxx", "maxy", res_min, res_max, max_cells,
-            ).alias("res")
-        ).distinct().collect()
-        res_list = sorted({r.res for r in res_rows})
-    if not res_list:
-        return spark.createDataFrame(
-            [], REFINE_SCHEMA_LONLAT if carry_lonlat else REFINE_SCHEMA
-        )
-
-    if broadcast_parts:
+        if not part_rows:
+            return spark.createDataFrame([], schema)
         # The flat index is built ONCE on the driver over every (area_key,
         # part) row — multi-part areas (a multipolygon with several outer
         # rings, areahandler.hpp:48-62) keep each part; eval ORs over a
         # key's parts — then shipped per executor.
+        keys = [r[0] for r in part_rows]
         index = W.FlatPolygonIndex.build(
-            (r["area_key"], bytes(r["part_wkb"])) for r in part_rows
+            zip(keys, (bytes(r[1]) for r in part_rows))
         )
-        # Preferred physical strategy: map-side probe. If the (cell, area)
-        # cover table also fits the broadcast, ship it with the index and
-        # run the whole join as one narrow mapInArrow over the raw points —
-        # no explode, no join, no candidate shuffle. Falls back to the
-        # broadcast-WKB equi-join when the cover is too wide.
-        key_of_part = np.fromiter(
-            (index.key_id[r["area_key"]] for r in part_rows),
-            dtype=np.int64, count=len(part_rows),
-        )
-        keys_by_id = [None] * len(index.key_id)
-        for k, i in index.key_id.items():
-            keys_by_id[i] = k
-        # CellProbeIndex dedups (cell, key) pairs at build time — same set
-        # as the old cover.distinct() job, computed from the driver arrays
-        probe = CellProbeIndex(
-            np.column_stack([cover_cells, key_of_part[cover_owner]])
-            if len(cover_cells) else np.empty((0, 2), np.int64),
-            index, res_list, keys_by_id,
-        )
-        if len(probe.cand_key) <= MAX_PROBE_CELLS:
+        # positional Row access: by name it costs ~4 us a field
+        bbox = np.array([r[2:] for r in part_rows], dtype=np.float64)
+        probe = _probe_index(keys, bbox, index, res_min)
+        if probe is not None:
+            # Preferred physical strategy: the whole join as one narrow
+            # mapInArrow over the raw points — no explode, no join, no
+            # candidate shuffle.
             bcp = spark.sparkContext.broadcast(probe)
             # NOT spread_input-widened (r6 A/B, interleaved): the probe is
             # already cheap per point, so the extra exchange's stage
@@ -296,6 +315,17 @@ def pip_join(
                 refined.dropDuplicates(["point_id", "area_key"])
                 if dedup_pairs and not unique_points else refined
             )
+
+    if res_list is None:
+        # discover the resolutions actually present with one tiny aggregate
+        res_rows = polygon_parts.select(
+            C.adaptive_cover_res(
+                "minx", "miny", "maxx", "maxy", res_min, res_max, max_cells,
+            ).alias("res")
+        ).distinct().collect()
+        res_list = sorted({r.res for r in res_rows})
+    if not res_list:
+        return spark.createDataFrame([], schema)
 
     cover = polygon_parts.withColumn(
         "res",

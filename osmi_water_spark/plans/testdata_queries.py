@@ -568,11 +568,11 @@ def _pip_query(spark, sf_dir, salt: int):
     points = _nodes_geo(spark, sf_dir).select(
         F.col("node_id").alias("point_id"), "lon", "lat"
     )
-    # explicit knobs (as the pipeline passes them) so the standalone query
-    # measures the JOIN, not auto-mode's discovery jobs: broadcast decision
-    # pinned (tiny rect set), res_list = the full adaptive range (a superset
-    # is exact — absent resolutions match no cover cells), unique ids
-    # declared (node_id is a key) -> probe mode is shuffle-free end to end.
+    # explicit knobs so the standalone query measures the JOIN, not
+    # auto-mode's discovery jobs: broadcast decision pinned (tiny rect set),
+    # unique ids declared (node_id is a key) -> probe mode is shuffle-free
+    # end to end. The probe uses its own cover's resolutions; res_list (the
+    # full default adaptive range) only steers the cell-join fallback.
     pairs = pip_join(
         points, parts, salt=salt, broadcast_parts=True,
         res_list=list(range(3, C.DEFAULT_RES + 1)), unique_points=True,

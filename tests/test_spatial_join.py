@@ -231,36 +231,6 @@ def test_np_cover_matches_jvm_cover(spark, res_min, res_max, max_cells):
     assert counts.max() <= max_cells or (res[counts > max_cells] == res_min).all()
 
 
-def test_probe_cover_arrow_collect_fallback(spark, monkeypatch):
-    """The probe-cover collect is a single bounded Arrow pull (no Python
-    Rows): with the cap forced below the cover size the join must fall
-    back to the broadcast equi-join and produce identical pairs."""
-    import osmi_water_spark.operators.spatial_join as SJ
-
-    rows = [
-        (float(i % 10), float(i // 10), float(i % 10) + 1.5, float(i // 10) + 1.5)
-        for i in range(40)
-    ]
-    parts = spark.createDataFrame(
-        [
-            (str(i), bytes(W.wkb_polygon([np.array(
-                [[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]]
-            )])), x0, y0, x1, y1)
-            for i, (x0, y0, x1, y1) in enumerate(rows)
-        ],
-        "area_key string, part_wkb binary, minx double, miny double, "
-        "maxx double, maxy double",
-    )
-    pts = spark.createDataFrame(
-        [(i, float(i % 12) + 0.7, float(i % 7) + 0.7) for i in range(300)],
-        "point_id long, lon double, lat double",
-    )
-    probe = {(r.point_id, r.area_key) for r in pip_join(pts, parts, broadcast_parts=True).collect()}
-    monkeypatch.setattr(SJ, "MAX_PROBE_CELLS", 1)
-    fallback = {(r.point_id, r.area_key) for r in pip_join(pts, parts, broadcast_parts=True).collect()}
-    assert probe == fallback and len(probe) > 0
-
-
 def test_cell_probe_index_at_cap_scale():
     """Driver-side stress: CellProbeIndex construction + a candidates()
     probe at MAX_PROBE_CELLS rows stays numpy-vectorized (seconds, not
@@ -295,3 +265,174 @@ def test_cell_probe_index_at_cap_scale():
     want = np.unique(pairs[pairs[:, 0] == cell][:, 1])
     rows_idx, keys = probe.candidates(np.array([cell], dtype=np.int64))
     assert (np.sort(keys) == want).all() and (rows_idx == 0).all()
+
+
+# ---------------- probe cover sized to the parts ----------------
+
+
+def _star_rows(seed: int, n: int, box=(5.0, 35.0, 45.0, 65.0)) -> list[dict]:
+    """``n`` seeded star-shaped parts of 0.02-0.12 deg radius in a 40 x 30
+    deg box, as collected part rows (area_key, part_wkb, bbox)."""
+    rng = np.random.RandomState(seed)
+    rows = []
+    for i in range(n):
+        cx, cy = rng.uniform(box[0], box[2]), rng.uniform(box[1], box[3])
+        m = rng.randint(5, 12)
+        ang = np.linspace(0.0, 2 * np.pi, 2 * m, endpoint=False)
+        rad = rng.uniform(0.02, 0.12) * np.where(np.arange(2 * m) % 2 == 0, 1.0, 0.5)
+        ring = np.column_stack([cx + rad * np.cos(ang), cy + rad * np.sin(ang)])
+        ring = np.vstack([ring, ring[:1]])
+        lo, hi = ring.min(axis=0), ring.max(axis=0)
+        rows.append({"area_key": f"s{i}", "part_wkb": W.wkb_polygon([ring]),
+                     "minx": float(lo[0]), "miny": float(lo[1]),
+                     "maxx": float(hi[0]), "maxy": float(hi[1])})
+    return rows
+
+
+def _record_np_cover(monkeypatch) -> list:
+    """Wrap ``cells.np_cover``; returns the list its results land in."""
+    from osmi_water_spark.functions import cells as C
+
+    seen, orig = [], C.np_cover
+
+    def np_cover(*a, **kw):
+        out = orig(*a, **kw)
+        seen.append(out)
+        return out
+
+    monkeypatch.setattr(C, "np_cover", np_cover)
+    return seen
+
+
+def _probe_of(rows: list[dict]):
+    """The probe pip_join builds over these part rows (res_min 3)."""
+    import osmi_water_spark.operators.spatial_join as SJ
+
+    keys = [r["area_key"] for r in rows]
+    bbox = np.array([(r["minx"], r["miny"], r["maxx"], r["maxy"]) for r in rows])
+    index = W.FlatPolygonIndex.build(zip(keys, (r["part_wkb"] for r in rows)))
+    return SJ._probe_index(keys, bbox, index, 3)
+
+
+def _parts_df(spark, rows):
+    return spark.createDataFrame(
+        [(r["area_key"], bytearray(r["part_wkb"]), r["minx"], r["miny"], r["maxx"], r["maxy"])
+         for r in rows],
+        "area_key string, part_wkb binary, minx double, miny double, "
+        "maxx double, maxy double",
+    )
+
+
+def test_probe_cover_is_sized_to_parts(monkeypatch):
+    """Each part's probe cover spans <= PROBE_CELLS_PER_PART cells unless
+    it sits at res_min, so a uniform point meets a handful of candidate
+    parts (a res-7 cover gives ~73 on this density)."""
+    import osmi_water_spark.operators.spatial_join as SJ
+    from osmi_water_spark.functions import cells as C
+
+    rows = _star_rows(5, 20_000)
+    seen = _record_np_cover(monkeypatch)
+    probe = _probe_of(rows)
+    (res, _, owner), = seen
+    counts = np.bincount(owner, minlength=len(rows))
+    assert ((counts <= SJ.PROBE_CELLS_PER_PART) | (res == 3)).all()
+    assert probe.res_list == sorted(set(res.tolist()))
+
+    rng = np.random.RandomState(6)
+    lon, lat = rng.uniform(5.0, 45.0, 20_000), rng.uniform(35.0, 65.0, 20_000)
+    pairs = set()
+    for r in probe.res_list:
+        rr, kk = probe.candidates(C.np_cell_of(lon, lat, r))
+        pairs.update(zip(rr.tolist(), kk.tolist()))
+    assert len(pairs) / len(lon) <= 4.0
+
+
+@pytest.mark.parametrize("field,value", [("maxy", None), ("minx", float("nan")),
+                                         ("maxx", float("inf"))])
+def test_probe_rejects_non_finite_bbox(spark, field, value):
+    """A null/NaN/inf bbox would become a plausible-looking cell; the probe
+    names the offending area_key instead."""
+    rows = _star_rows(7, 4)
+    rows[2][field] = value
+    with pytest.raises(ValueError, match="area_key 's2'"):
+        pip_join(_points(spark), _parts_df(spark, rows), broadcast_parts=True)
+
+
+def _ray_cast_pairs(rows, ids, lon, lat) -> set:
+    out = set()
+    for r in rows:
+        hit = W.points_in_wkb_polygon(lon, lat, r["part_wkb"])
+        out.update((int(i), r["area_key"]) for i in ids[hit])
+    return out
+
+
+def _star_points(spark, rows, n: int, seed: int):
+    """Uniform points over the parts' extent plus each part's centre."""
+    rng = np.random.RandomState(seed)
+    lo = min(r["minx"] for r in rows), min(r["miny"] for r in rows)
+    hi = max(r["maxx"] for r in rows), max(r["maxy"] for r in rows)
+    lon = np.concatenate([rng.uniform(lo[0], hi[0], n),
+                          [(r["minx"] + r["maxx"]) / 2 for r in rows]])
+    lat = np.concatenate([rng.uniform(lo[1], hi[1], n),
+                          [(r["miny"] + r["maxy"]) / 2 for r in rows]])
+    ids = np.arange(len(lon), dtype=np.int64)
+    df = spark.createDataFrame(
+        list(zip(ids.tolist(), lon.tolist(), lat.tolist())),
+        "point_id long, lon double, lat double",
+    )
+    return df, ids, lon, lat
+
+
+def test_probe_ignores_caller_res_list(spark, monkeypatch):
+    """The probe looks points up at its own cover's resolutions: a caller's
+    coarse res_list (here 3..7, the cell-join default) must not drop pairs
+    whose parts are covered at res >= 9."""
+    rows = _star_rows(9, 300, box=(10.0, 40.0, 12.0, 41.5))
+    parts = _parts_df(spark, rows)
+    pts, ids, lon, lat = _star_points(spark, rows, 3000, 10)
+    seen = _record_np_cover(monkeypatch)
+
+    def run(res_list):
+        out = pip_join(pts, parts, broadcast_parts=True, res_list=res_list)
+        return {(r.point_id, r.area_key) for r in out.collect()}
+
+    coarse = run(list(range(3, 8)))
+    assert len(seen) == 1 and seen[0][0].min() >= 9
+    want = _ray_cast_pairs(rows, ids, lon, lat)
+    assert coarse == run(None) == want and len(want) > 300
+
+
+def test_probe_cap_is_checked_before_allocation(spark, monkeypatch):
+    """A probe cover of exactly MAX_PROBE_CELLS pairs takes the probe; one
+    pair more takes the broadcast equi-join without ever building a
+    CellProbeIndex. Both return the same pairs."""
+    import osmi_water_spark.operators.spatial_join as SJ
+
+    rows = _star_rows(11, 60, box=(-3.0, -2.0, 0.0, 0.0))
+    parts = _parts_df(spark, rows)
+    pts, ids, lon, lat = _star_points(spark, rows, 500, 12)
+    seen = _record_np_cover(monkeypatch)
+    built = []
+
+    init = SJ.CellProbeIndex.__init__
+
+    def spy_init(self, *a, **kw):
+        built.append(1)
+        init(self, *a, **kw)
+
+    monkeypatch.setattr(SJ.CellProbeIndex, "__init__", spy_init)
+
+    def run(cap):
+        monkeypatch.setattr(SJ, "MAX_PROBE_CELLS", cap)
+        built.clear()
+        out = {(r.point_id, r.area_key)
+               for r in pip_join(pts, parts, broadcast_parts=True).collect()}
+        return out, len(built)
+
+    _probe_of(rows)
+    n = len(seen[-1][1])
+    at_cap, probes_at_cap = run(n)
+    over_cap, probes_over_cap = run(n - 1)
+    assert (probes_at_cap, probes_over_cap) == (1, 0)
+    want = _ray_cast_pairs(rows, ids, lon, lat)
+    assert at_cap == over_cap == want and len(want) > 0
